@@ -106,8 +106,10 @@ def verify_pairs(pairs: DataFrame, signed: DataFrame, cfg: DedupConfig,
     s = survivors
     # None (auto) resolves to off here — scale-based resolution is
     # run_pipeline's job (it passes an explicit bool down); direct
-    # operator callers (streaming micro-batches, knn query sets) are
-    # small-input contexts where the semi filter's fixed cost loses
+    # operator callers such as knn query sets are small-input contexts
+    # where the semi filter's fixed cost loses.  Streaming micro-batches
+    # run with it ON: incremental_batch_dedup resolves None to True,
+    # since their content side is the whole index history
     semi = bool(cfg.verify_semi_filter)
     if semi:
         # Never shuffle the full corpus content to verify a small pair

@@ -71,3 +71,57 @@ def test_microbatch_verify_plan_has_no_full_content_shuffle(spark):
     assert "SortMergeJoin" not in plan  # no full-width content shuffle
     rows = out.collect()
     assert len(rows) == 1 and rows[0].is_duplicate
+
+
+def test_handler_signs_each_microbatch_once(spark, tmp_path):
+    """Every read of the micro-batch frame inside the handler (index
+    and within-batch joins, signature and content unions, verify, sink
+    write, index append, content-store write) scans one eager local
+    checkpoint: the signing plan runs once per call, not once per read.
+    The checkpoints of finished calls do not accumulate."""
+    import gc
+
+    cfg = default_config()
+    sc = spark.sparkContext
+    dup = "def repeated_body(x):\n    return x * 7 + len('gamma')\n" * 6
+
+    def counted(rows):
+        acc = sc.accumulator(0)
+
+        def identity(batches):
+            for b in batches:
+                acc.add(b.num_rows)
+                yield b
+
+        signed = _signed(spark, cfg, rows)
+        return signed.mapInArrow(identity, signed.schema), acc
+
+    batches = [
+        [("r", "s0", "a" * 40, "py", dup + "# 0\n"),
+         ("r", "s0b", "b" * 40, "py", dup + "# 0b\n"),
+         ("r", "u0", "c" * 40, "py", "first unique body " * 20)],
+        [("r", "s1", "d" * 40, "py", dup + "# 1\n"),
+         ("r", "u1", "e" * 40, "py", "second unique body " * 20)],
+        [("r", "s2", "f" * 40, "py", dup + "# 2\n")],
+        [("r", "u3", "g" * 40, "py", "fourth unique body " * 20),
+         ("r", "s3", "h" * 40, "py", dup + "# 3\n")],
+    ]
+
+    def stored_rdds():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = stored_rdds()
+    sink = str(tmp_path / "sink")
+    index = str(tmp_path / "index")
+    handle = make_incremental_handler(None, cfg, sink, index_path=index)
+    for batch_id, rows in enumerate(batches):
+        frame, acc = counted(rows)
+        handle(frame, batch_id)
+        assert acc.value == len(rows), (batch_id, acc.value)
+
+    # the repeated body pairs up within batch 0 and across batches
+    dup_pairs = spark.read.parquet(sink).filter("is_duplicate").count()
+    assert dup_pairs == 1 + 2 + 3 + 4
+    # checkpoints of finished calls are not retained
+    gc.collect()
+    assert len(stored_rdds() - before) <= 2
