@@ -5,7 +5,12 @@ DataFrame/SQL plans, Arrow-vectorized pandas UDF kernels, explicit
 partitioning/skew handling, checkpointed resumable stages.
 """
 
+from polyminhash_spark import pyworker
 from polyminhash_spark.config import DedupConfig, default_config, reference_config
+
+# every engine UDF closure imports this package, so each Python worker
+# gates its per-task zip re-reads from its first engine task on
+pyworker.install()
 
 __all__ = ["DedupConfig", "default_config", "reference_config"]
 __version__ = "0.1.0"

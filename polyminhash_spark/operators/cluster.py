@@ -76,6 +76,10 @@ def _local_contract(edges: DataFrame) -> DataFrame:
 
     def contract(pdf_iter):
         import pandas as pd
+
+        # the closure references no engine module, so import the package
+        # here: it installs the worker's stat-gated zip invalidation
+        import polyminhash_spark  # noqa: F401
         parent: dict = {}
 
         def find(x):
